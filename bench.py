@@ -21,19 +21,6 @@ repeat-to-repeat variance (the number the round notes track against
 the <±10% bar). Per-query timing includes plan + execution + a
 count() materialization (no driver collect of the data itself —
 results land in marts, not the driver).
-
-De-gamed headline (VERDICT r13 #1, optimization r14): every timed run
-executes under SPARK_GRAFT_NO_MEMO=1, which disables the engine's
-keep_result whole-result memo — so steady-state numbers measure query
-computation (plan build + execution over the within-query persisted
-intermediates), never a memo hit over checkpoint leaves. The memo's
-serving latency is still reported, separately: after the timed runs
-each query runs twice more with the memo enabled and the second run
-(a memo hit for keep_result-wrapped registrations; ≈steady for the
-rest) lands in the artifact as memo_sec plus the stdout line's
-memo_hit_total_sec. This is a measurement-methodology fix, not a new
-metric: headline names/semantics are unchanged, entries were only
-ever ADDED, and r13's memoized readings remain in BENCH_r13/artifacts.
 """
 
 from __future__ import annotations
@@ -206,6 +193,12 @@ FLOOR_PROFILE_STEADY = 5
 # regression into "floor jitter"
 FLOOR_MEDIAN_DRIFT_FLAG = 2.0
 
+# The driver parses a JSON line out of the last ~2000 chars of stdout.
+STDOUT_MAX_BYTES = 1900
+# Sizing stand-in for any printed number: a time under 10000 s at 2 or
+# 3 decimals never prints wider.
+_WIDEST_NUMBER = 9999.999
+
 
 def calibration_run(spark) -> float:
     """Fixed synthetic reference job (VERDICT r7 #5): time a constant
@@ -232,13 +225,49 @@ def calibration_run(spark) -> float:
     return round(min(runs), 3)
 
 
+def _stdout_line(
+    timings: dict[str, float],
+    total: float,
+    warmup: float,
+    calibration_sec: float,
+    sf: float,
+) -> str:
+    """The compact stdout JSON line: 2-decimal timings of the first N
+    headline queries in HEADLINE order, N the most that fit in
+    STDOUT_MAX_BYTES. N is sized with every number printed at its
+    widest (_WIDEST_NUMBER), so the kept set depends only on which
+    queries ran, never on how fast they were: the same queries appear
+    on every run. Queries left off the line stay in the artifact;
+    queries_omitted counts them."""
+    order = [q for q in HEADLINE if q in timings]
+
+    def line(n: int, sizing: bool) -> str:
+        def num(v: float, digits: int = 2) -> float:
+            return _WIDEST_NUMBER if sizing else round(v, digits)
+
+        payload = {
+            "metric": "headline_queries_total_sec",
+            "value": num(total),
+            "unit": "sec",
+            "queries": {q: num(timings[q]) for q in order[:n]},
+            "warmup_sec": num(warmup),
+            "calibration_sec": num(calibration_sec, 3),
+            "sf": sf,
+        }
+        if n < len(timings):
+            payload["queries_omitted"] = len(timings) - n
+            payload["full"] = "artifacts/bench_headline.json"
+        return json.dumps(payload, separators=(",", ":"))
+
+    n = len(order)
+    while n > 0 and len(line(n, sizing=True)) > STDOUT_MAX_BYTES:
+        n -= 1
+    return line(n, sizing=False)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    # Timed runs measure computation, not keep_result memo hits
-    # (VERDICT r13 #1) — see the module docstring. The memo-enabled
-    # serving latency is measured separately per query (memo_sec).
-    os.environ["SPARK_GRAFT_NO_MEMO"] = "1"
     spark = get_spark("bench")
     qs = entrymod.queries()
 
@@ -310,7 +339,6 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     colds: dict[str, float] = {}
-    memo_secs: dict[str, float] = {}
     spreads: dict[str, float] = {}
     twin_stats: dict[str, dict] = {}
     floor_profile: dict[str, dict] = {}
@@ -366,23 +394,6 @@ def main() -> None:
                 t0 = time.time()
                 rows[variant] = fn(spark, sf_dir).count()
                 runs[variant].append(time.time() - t0)
-        # Memo-enabled serving latency, reported ALONGSIDE the timed
-        # (no-memo) headline — never in it (VERDICT r13 #1): run 1
-        # populates the keep_result memo, run 2 is the hit. For
-        # registrations that aren't memoized, this reads ≈ steady.
-        memo_runs: dict[str, float] = {}
-        del os.environ["SPARK_GRAFT_NO_MEMO"]
-        try:
-            for _ in range(2):
-                for variant in pair:
-                    fn = _FAST_TWINS.get(variant) or qs[variant]
-                    t0 = time.time()
-                    fn(spark, sf_dir).count()
-                    memo_runs[variant] = time.time() - t0
-        finally:
-            os.environ["SPARK_GRAFT_NO_MEMO"] = "1"
-        for variant in pair:
-            memo_secs[variant] = round(memo_runs[variant], 3)
         for variant in pair:
             _record(variant, runs[variant], rows[variant])
             if variant in FLOOR_PROFILE:
@@ -428,10 +439,8 @@ def main() -> None:
     # overflowed that window and left BENCH_r07 `parsed: null`. So:
     # (a) the FULL headline payload (3-decimals, cold, spread,
     #     calibration) is written to artifacts/bench_headline.json, and
-    # (b) stdout carries ONE compact JSON line guaranteed < 1900 bytes:
-    #     2-decimal timings, and if the headline set ever outgrows the
-    #     budget the FASTEST queries are trimmed from the line (never
-    #     the file), with queries_omitted recording the trim.
+    # (b) stdout carries ONE compact JSON line of at most
+    #     STDOUT_MAX_BYTES (see _stdout_line).
     detail = {
         "metric": "headline_queries_total_sec",
         "value": total,
@@ -442,8 +451,6 @@ def main() -> None:
         "calibration_start_sec": calib_start,
         "calibration_end_sec": calib_end,
         "snapshot_read_path": use_snapshot,
-        "no_memo_timed_runs": True,
-        "memo_sec": memo_secs,
         "cold_sec": colds,
         "spread_pct": spreads,
         "twin_pairs": twin_stats,
@@ -461,35 +468,9 @@ def main() -> None:
     with open(os.path.join(art, "bench_headline.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
 
-    def _stdout_line(n_keep: int) -> str:
-        kept = set(
-            k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])[:n_keep]
-        )
-        payload = {
-            "metric": "headline_queries_total_sec",
-            "value": round(total, 2),
-            "unit": "sec",
-            "queries": {
-                k: round(v, 2) for k, v in timings.items() if k in kept
-            },
-            "warmup_sec": round(warmup, 2),
-            "calibration_sec": detail["calibration_sec"],
-            "no_memo": True,
-            "memo_hit_total_sec": round(sum(memo_secs.values()), 2),
-            "sf": sf,
-        }
-        omitted = len(timings) - len(kept)
-        if omitted:
-            payload["queries_omitted"] = omitted
-            payload["full"] = "artifacts/bench_headline.json"
-        return json.dumps(payload, separators=(",", ":"))
-
-    n_keep = len(timings)
-    line = _stdout_line(n_keep)
-    while len(line) > 1900 and n_keep > 10:
-        n_keep -= 5
-        line = _stdout_line(n_keep)
-    print(line)
+    print(
+        _stdout_line(timings, total, warmup, detail["calibration_sec"], sf)
+    )
     spark.stop()
 
 

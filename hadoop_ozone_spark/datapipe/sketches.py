@@ -710,9 +710,9 @@ def kmv_set_ops(
     two sketches, then compose (see kmv_set_ops_from_sketches).
 
     ``tag`` names the scratch slot pair the composed sketches persist
-    under — call sites whose results outlive the call (keep_result
-    memos) MUST pass an exclusive tag, or building one query's sketches
-    unpersists the other's checkpoint blocks (ADVICE r13 high)."""
+    under — call sites over different inputs MUST pass exclusive tags,
+    or building one query's sketches unpersists the checkpoint blocks
+    another query's lazily built result still reads."""
     return kmv_set_ops_from_sketches(
         kmv_sketch(a, col), kmv_sketch(b, col), tag=tag
     )

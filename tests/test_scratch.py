@@ -1,11 +1,15 @@
 """Scratch-cache registry laws (ADVICE r5): bounded generations per
-slot, steady-state reuse for identical plans, release on plan change."""
+slot, steady-state reuse for identical plans, release on plan change;
+and, for the loop operators that use the registry, a fresh result by
+value whenever params or input change within one session."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from hadoop_ozone_spark import scratch
+from hadoop_ozone_spark.datapipe import dedup
+from hadoop_ozone_spark.operators import listing
 
 
 def _agg(spark, n):
@@ -56,132 +60,67 @@ def test_keep_ckpt_returns_leaf_and_reuses(spark):
     assert c is not a  # plan change: new generation
 
 
-def test_keep_result_memoizes_on_input_plan(spark):
-    calls = []
-
-    def build(n):
-        def _b():
-            calls.append(n)
-            return _agg(spark, n).localCheckpoint()
-        return _b
-
-    r1 = scratch.keep_result("t_res", spark.range(100), build(100))
-    r2 = scratch.keep_result("t_res", spark.range(100), build(100))
-    assert r1 is r2 and calls == [100]  # same input plan: builder skipped
-    r3 = scratch.keep_result("t_res", spark.range(200), build(200))
-    assert r3 is not r1 and calls == [100, 200]  # input changed: rebuilt
-
-
-def test_keep_result_keys_on_params(spark):
-    """VERDICT r13 what's-wrong #2: a second in-session call with the
-    SAME input but different builder parameters must rebuild — the memo
-    key folds the params tuple in."""
-    calls = []
-
-    def build(p):
-        def _b():
-            calls.append(p)
-            return _agg(spark, 100).localCheckpoint()
-        return _b
-
-    a = scratch.keep_result(
-        "t_res_p", spark.range(100), build(8), params=("max_iters", 8)
+def _chain_pairs(spark, first, n):
+    """Dup edges of an n-node chain first - first+1 - ... - first+n-1."""
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(first, first + n - 1)],
+        "doc_a long, doc_b long",
     )
-    b = scratch.keep_result(
-        "t_res_p", spark.range(100), build(16), params=("max_iters", 16)
+
+
+def _link_chain(spark, vol, hops):
+    """Bucket links vol/b0 -> vol/b1 -> ... -> vol/b{hops}, the last
+    bucket not a link."""
+    return spark.createDataFrame(
+        [(vol, f"b{i}", vol, f"b{i + 1}") for i in range(hops)]
+        + [(vol, f"b{hops}", None, None)],
+        "volume string, bucket string, source_volume string, "
+        "source_bucket string",
     )
-    assert b is not a and calls == [8, 16]  # changed param: rebuilt
-    c = scratch.keep_result(
-        "t_res_p", spark.range(100), build(8), params=("max_iters", 8)
-    )
-    assert c is a and calls == [8, 16]  # same (input, params): memo hit
 
 
-def test_loop_operators_rebuild_on_changed_params(spark):
-    """The registered loop operators fold their depth/iteration caps
-    into the memo key (library-level landmine from VERDICT r13 #2)."""
-    from hadoop_ozone_spark.datapipe import dedup
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "doc_a long, doc_b long"
-    ).localCheckpoint()
-    a = dedup.connected_dedup_groups(pairs, max_iters=4)
-    b = dedup.connected_dedup_groups(pairs, max_iters=8)
-    assert a is not b  # different max_iters: not the same memo entry
-    c = dedup.connected_dedup_groups(pairs, max_iters=4)
-    assert c is a  # same (input, params): memo hit
-
-
-def test_no_memo_env_disables_keep_result(spark, monkeypatch):
-    """SPARK_GRAFT_NO_MEMO=1 (the bench's timed-run mode, VERDICT r13
-    #1): every call rebuilds — no read, no store."""
-    calls = []
-
-    def _b():
-        calls.append(1)
-        return _agg(spark, 100).localCheckpoint()
-
-    monkeypatch.setenv("SPARK_GRAFT_NO_MEMO", "1")
-    scratch.keep_result("t_nomemo", spark.range(100), _b)
-    scratch.keep_result("t_nomemo", spark.range(100), _b)
-    assert len(calls) == 2  # no memo hits under the flag
-    monkeypatch.delenv("SPARK_GRAFT_NO_MEMO")
-    r3 = scratch.keep_result("t_nomemo", spark.range(100), _b)
-    r4 = scratch.keep_result("t_nomemo", spark.range(100), _b)
-    assert len(calls) == 3 and r3 is r4  # memo back on
+def test_loop_operators_follow_changed_params(spark):
+    """A second call in the same session with a different iteration
+    cap computes its own result: too few rounds leave the 16-node chain
+    split, enough rounds label every node with the chain's minimum."""
+    pairs = _chain_pairs(spark, 1, 16)
+    for op, label in (
+        (dedup.connected_dedup_groups, "group_id"),
+        (dedup.dedup_clusters, "cluster_id"),
+    ):
+        short = {r["doc_id"]: r[label] for r in op(pairs, max_iters=1).collect()}
+        full = {r["doc_id"]: r[label] for r in op(pairs, max_iters=20).collect()}
+        assert short != full, op.__name__
+        assert full == {i: 1 for i in range(1, 17)}, op.__name__
 
 
-def test_invalidate_drops_session_memos(spark):
-    """The staleness hook (VERDICT r13 what's-wrong #4): a caller that
-    rewrites files under a memoized result's path invalidates, and the
-    next invocation rebuilds against the new data."""
-    import os
-    import tempfile
+def test_resolve_bucket_links_follows_changed_depth(spark):
+    buckets = _link_chain(spark, "v", 3)
 
-    calls = []
-    with tempfile.TemporaryDirectory() as d:
-        path = os.path.join(d, "plane")
-        spark.range(5).write.mode("overwrite").parquet(path)
+    def b0(max_depth):
+        rows = listing.resolve_bucket_links(buckets, max_depth=max_depth)
+        return rows.filter("bucket = 'b0'").collect()[0]
 
-        def _b():
-            calls.append(1)
-            return spark.read.parquet(path).agg(F.sum("id")).localCheckpoint()
-
-        key = spark.read.parquet(path)
-        r1 = scratch.keep_result("t_inval", key, _b)
-        assert r1.collect()[0][0] == 10 and calls == [1]
-        # rewrite the files under the same path: the plan is unchanged,
-        # so without invalidation the memo would serve stale rows
-        spark.range(7).write.mode("overwrite").parquet(path)
-        spark.catalog.refreshByPath(path)
-        scratch.invalidate(spark)
-        key2 = spark.read.parquet(path)
-        r2 = scratch.keep_result("t_inval", key2, _b)
-        assert len(calls) == 2  # rebuilt
-        assert r2.collect()[0][0] == 21  # new data served
+    shallow = b0(2)  # 3 hops do not fit in 2
+    assert shallow["is_loop"] and shallow["resolved_bucket"] == "b2"
+    deep = b0(4)
+    assert not deep["is_loop"]
+    assert (deep["resolved_bucket"], deep["depth"]) == ("b3", 3)
 
 
-def test_keep_ckpt_replacement_drops_result_memos(spark):
-    """ADVICE r13 (high/medium): a keep_ckpt generation replacement
-    destroys checkpoint blocks a memoized result may reference — the
-    registry drops the session's result memos instead of serving a
-    frame over destroyed blocks; the caller transparently rebuilds."""
-    calls = []
-    scratch.fresh("t_ck_dep")
-
-    def _b():
-        calls.append(1)
-        inner = scratch.keep_ckpt("t_ck_dep", _agg(spark, 100))
-        return inner.withColumn("y", F.col("count") + 1)
-
-    r1 = scratch.keep_result("t_ck_res", spark.range(100), _b)
-    r1.count()
-    assert calls == [1]
-    # another invocation of the same inner operator with a DIFFERENT
-    # input replaces the checkpoint generation...
-    scratch.fresh("t_ck_dep")
-    scratch.keep_ckpt("t_ck_dep", _agg(spark, 200))
-    # ...so the memo entry must be gone: the next call rebuilds
-    r2 = scratch.keep_result("t_ck_res", spark.range(100), _b)
-    assert len(calls) == 2 and r2 is not r1
-    r2.count()  # and the rebuilt frame is actionable
+def test_interleaved_builds_keep_their_own_rows(spark):
+    """Build on input A, then on input B, then run an action on A: A's
+    rows equal a serial run of A, although both builds share the
+    operators' scratch tags."""
+    pairs_a, pairs_b = _chain_pairs(spark, 1, 9), _chain_pairs(spark, 100, 5)
+    for op, a_in, b_in in (
+        (dedup.connected_dedup_groups, pairs_a, pairs_b),
+        (dedup.dedup_clusters, pairs_a, pairs_b),
+        (listing.resolve_bucket_links, _link_chain(spark, "v", 3),
+         _link_chain(spark, "w", 1)),
+    ):
+        serial = sorted(op(a_in).collect())
+        a = op(a_in)
+        b = op(b_in)
+        assert sorted(b.collect()) == sorted(op(b_in).collect())
+        assert sorted(a.collect()) == serial, op.__name__
